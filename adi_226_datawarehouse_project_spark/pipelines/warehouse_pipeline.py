@@ -1,5 +1,5 @@
 """The reference's END-TO-END pipeline as one orchestrated run: the
-hybrid DAG (`nyc_hybrid_etl_pipeline.py:403-408` — `start >>
+ETL DAG (`nyc_hybrid_etl_pipeline.py:403-408` — `start >>
 [trigger_airbnb, run_glue_311]`, sync barrier, warehouse load, gold
 publication) re-expressed over this engine's operators and the
 `orchestration.run_dag` executor.

@@ -7,7 +7,7 @@ Reference parity: the LOOP SHAPE (a bounded number of re-attempts,
 each preceded by a fixed `retry_delay`) mirrors Airflow task-retry
 semantics, which the reference configures via default_args
 (`nyc_ingestion_dag.py:135-136`: retries=1, retry_delay=5 minutes;
-the hybrid ETL DAG sets retries=0 at
+the 311 ETL DAG sets retries=0 at
 `nyc_hybrid_etl_pipeline.py:238`). The repo's own defaults at the
 call sites (retries=2, 60s) are this engine's calibration, not a
 mirror of those values; backoff=1.0 reproduces Airflow's fixed delay.

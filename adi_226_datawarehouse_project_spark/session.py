@@ -51,6 +51,17 @@ def _is_live(session: SparkSession | None) -> bool:
         return False
 
 
+def _default_driver_memory(phys_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` when SPARK_GRAFT_DRIVER_MEM is unset:
+    min(16g, ¾ of physical memory) in whole GiB, at least 1g. A fixed
+    16g on a smaller host would overstate the heap the warehouse layout
+    rule sizes against (model/star.py ``_heap_bytes``) and leave the
+    OS nothing."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(16, phys_bytes * 3 // 4 >> 30))}g"
+
+
 def get_spark(
     app_name: str | None = None,
     shuffle_partitions: int | None = None,
@@ -111,18 +122,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         # Cached-relation build cost is dominated by dictionary/RLE
-        # encoding of high-cardinality string columns; with ample
-        # executor memory the encode CPU outweighs the space saved
-        # (measured: warehouse materialization 23s → 13s at sf0.1).
-        # SPARK_GRAFT_CACHE_COMPRESS=true re-enables it for memory-
-        # tight runs — at a 128×-replicated corpus the uncompressed
-        # cache starved execution memory (UNABLE_TO_ACQUIRE) in a 16g
-        # heap; compressed cache + a bigger heap is that scale's
-        # operating point.
-        .config(
-            "spark.sql.inMemoryColumnarStorage.compressed",
-            _env_bool("SPARK_GRAFT_CACHE_COMPRESS", "false"),
-        )
+        # encoding of high-cardinality string columns; while the
+        # warehouse fits the heap the encode CPU outweighs the space
+        # saved (measured: warehouse materialization 23s → 13s at
+        # sf0.1), and a warehouse that does not fit goes to the parquet
+        # zone instead of the cache (model/star.py).
+        .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
         # ANSI off: the engine's cleaning layer relies on null-on-error
         # cast semantics (reference TRY_CAST behavior); explicit
         # try_* functions are still used where intent matters.
@@ -145,7 +150,10 @@ def get_spark(
         .config("spark.ui.enabled", _env_bool("SPARK_GRAFT_UI", "false"))
     )
     builder = builder.master(os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]"))
-    builder = builder.config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+    builder = builder.config(
+        "spark.driver.memory",
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+    )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

